@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Benchmark main — runs every registered query on
   * `SPARK_GRAFT_SF_DIR` and emits ONE JSON line with per-query seconds.
@@ -178,7 +179,7 @@ object Bench {
         (p(0) + p(1) + p(2) + p(5) + p(6) +
           (if (p.length > 7) p(7) else 0.0)) / 100.0
       } finally f.close()
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   /** Cumulative iowait seconds across all cores (/proc/stat field 5).
     * I/O stall burns no CPU anywhere, so `ext_share` is blind to it —
@@ -190,7 +191,7 @@ object Bench {
         val p = f.getLines().next().trim.split("\\s+").drop(1).map(_.toDouble)
         if (p.length > 4) p(4) / 100.0 else -1.0
       } finally f.close()
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   /** Cumulative PSI "some" stall seconds from a pressure file
     * (/proc/pressure/{cpu,io}). PSI counts time a runnable task was NOT
@@ -210,7 +211,7 @@ object Bench {
           case None => -1.0
         }
       } finally f.close()
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   /** This process's cgroup CPU throttle counters:
     * (nr_throttled, throttled seconds). Resolves the cgroup from
@@ -229,12 +230,12 @@ object Bench {
           }.toMap
           kv.get("nr_throttled").map(n => (n.toLong, kv.getOrElse(timeKey, 0.0) * toSec))
         } finally f.close()
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     val self =
       try {
         val f = scala.io.Source.fromFile("/proc/self/cgroup")
         try f.getLines().toList finally f.close()
-      } catch { case _: Throwable => Nil }
+      } catch { case NonFatal(_) => Nil }
     val v1Path = self.map(_.split(":", 3)).collectFirst {
       case Array(_, ctl, path) if ctl.split(",").contains("cpu") => path
     }
@@ -288,7 +289,7 @@ object Bench {
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").count()
         .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
     // optional comma-separated subset for focused profiling
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -320,7 +321,7 @@ object Bench {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           true
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             onFail(name)
             false
@@ -401,7 +402,7 @@ object Bench {
         val w0 = System.nanoTime()
         selected.foreach { case (name, fn) =>
           try fn(spark, wd).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] warmup $name failed (ignored): ${e.getMessage}")
           }
           // per-query isolation here too: gates persist slivers
@@ -441,7 +442,7 @@ object Bench {
         .map { f =>
           try spark.read.parquet(f.getPath)
             .write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] warm-touch ${f.getName} failed " +
               s"(ignored): ${e.getMessage}")
           }
@@ -510,7 +511,7 @@ object Bench {
             SparkEntry.queries("q_minhash_pairs")(spark, sfDir)
               .write.format("noop").mode("overwrite").save()
             true
-          } catch { case e: Throwable =>
+          } catch { case NonFatal(e) =>
             System.err.println(s"[bench] $name memo fixture fill FAILED " +
               s"(its number below is fill-inclusive cold): ${e.getMessage}")
             false
@@ -537,7 +538,7 @@ object Bench {
             QueriesPipeline.annExactTopK(spark, sfDir, m)
               .write.format("noop").mode("overwrite").save()
             true
-          } catch { case e: Throwable =>
+          } catch { case NonFatal(e) =>
             System.err.println(s"[bench] $name ann-exact fixture fill FAILED " +
               s"(its number below is fill-inclusive cold): ${e.getMessage}")
             false
@@ -601,7 +602,7 @@ object Bench {
         // say so instead of silently publishing them as warm.
         try SparkEntry.queries("q_minhash_pairs")(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] warm-memo fill FAILED (warm numbers " +
             s"below are effectively cold): ${e.getMessage}")
           warmFailed ::= "memo_fill"

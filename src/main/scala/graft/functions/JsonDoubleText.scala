@@ -8,10 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for [[JsonNumber.format]] — a custom
+/** Native Catalyst expression for [[JsonNumber.text]] — a custom
   * `Expression` with `doGenCode` (one static-call per value inside
   * whole-stage codegen) rather than a Scala UDF (which would box, break
-  * the codegen span, and serialize a closure per task).
+  * the codegen span, and serialize a closure per task). Finite doubles
+  * render as serde numbers, NaN/±Infinity as JSON strings.
   */
 case class JsonDoubleText(child: Expression) extends UnaryExpression {
 
@@ -24,11 +25,11 @@ case class JsonDoubleText(child: Expression) extends UnaryExpression {
       s"graft_json_double expects DOUBLE, got ${child.dataType.sql}")
 
   override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(JsonNumber.format(input.asInstanceOf[Double]))
+    UTF8String.fromString(JsonNumber.text(input.asInstanceOf[Double]))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(graft.functions.JsonNumber.format($c))")
+      s"org.apache.spark.unsafe.types.UTF8String.fromString(graft.functions.JsonNumber.text($c))")
 
   override protected def withNewChildInternal(newChild: Expression): JsonDoubleText =
     copy(child = newChild)
@@ -81,6 +82,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_json_double"),
       new ExpressionInfo(classOf[JsonDoubleText].getName, "graft_json_double"),
       (children: Seq[Expression]) => JsonDoubleText(children.head)))
+    ext.injectFunction((
+      FunctionIdentifier("graft_json_string"),
+      new ExpressionInfo(classOf[JsonStringExpr].getName, "graft_json_string"),
+      (children: Seq[Expression]) => JsonStringExpr(children.head)))
     ext.injectFunction((
       FunctionIdentifier("graft_rolling_shingle_hash"),
       new ExpressionInfo(classOf[RollingShingleHashExpr].getName,

@@ -14,6 +14,15 @@ package graft.functions
   */
 object JsonNumber {
 
+  /** JSON text of any double: finite → [[format]]; NaN/±Infinity → the
+    * JSON *strings* `"NaN"`, `"Infinity"`, `"-Infinity"`
+    * (`src/sqlite/converter.rs:43-51`, same rule in all three converters). */
+  def text(d: Double): String =
+    if (d.isNaN) "\"NaN\""
+    else if (d == Double.PositiveInfinity) "\"Infinity\""
+    else if (d == Double.NegativeInfinity) "\"-Infinity\""
+    else format(d)
+
   def format(d: Double): String = {
     require(!d.isNaN && !d.isInfinite, "non-finite doubles are encoded as strings upstream")
     if (d == 0.0) return if (1.0 / d < 0) "-0.0" else "0.0"

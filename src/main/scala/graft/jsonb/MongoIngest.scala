@@ -88,7 +88,7 @@ object MongoIngest {
     concat(
       lit("{"),
       concat_ws(",", df.schema.fields.map { f =>
-        concat(lit("\"" + f.name + "\":"), encodeField(f))
+        concat(TaggedJson.fieldKey(f.name), encodeField(f))
       }.toIndexedSeq: _*),
       lit("}"))
 

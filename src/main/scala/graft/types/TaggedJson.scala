@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.JsonString
+
 /** Lossless type-tagged JSON encoding — the reference's universal document
   * model (SURVEY §1.3). Every non-relational source row is erased to
   * `(id TEXT, data JSONB)` where `data` preserves types via `_type` tags:
@@ -16,57 +18,36 @@ import org.apache.spark.sql.types._
   *     `{"_type":"binary",...}`; DATETIME → `{"_type":"datetime","value":ISO}`;
   *     TIME → `{"_type":"time","value":"[-]Nd HH:MM:SS.ffffff"}`.
   *
-  * Implemented as pure Column trees (codegen'd by Catalyst, no UDFs): each
-  * builder returns a STRING column holding the JSON encoding of one value;
-  * [[rowJson]] assembles the `{...}` object. Building JSON text explicitly
-  * (instead of `to_json(struct(*))`) is what lets one logical column carry
-  * number-or-string union encodings (the non-finite-float rule).
+  * Implemented as Column trees codegen'd by Catalyst (built-ins plus the
+  * native `graft_json_string` and `graft_json_double` expressions, no
+  * UDFs): each builder returns a STRING column holding the JSON encoding
+  * of one value; [[rowJson]] assembles the `{...}` object. Building JSON
+  * text explicitly (instead of `to_json(struct(*))`) is what lets one
+  * logical column carry number-or-string union encodings (the
+  * non-finite-float rule).
   */
 object TaggedJson {
 
-  /** JSON string escaping with FULL serde_json parity: backslash, quote,
-    * the five shorthand control escapes (\b \t \n \f \r), and \u00XX for
-    * every other char below 0x20 (serde escapes them all — a stray 0x01
-    * in a document must not produce invalid JSON). Codegen-friendly
-    * regexp chain; the 27 rare-control replacements are generated
-    * statically. */
-  def jsonEscape(c: Column): Column = {
-    val shorthand = Seq(
-      "\\\\" -> "\\\\\\\\", // backslash FIRST (it appears in every escape)
-      "\"" -> "\\\\\"",
-      "\b" -> "\\\\b",
-      "\t" -> "\\\\t",
-      "\n" -> "\\\\n",
-      "\f" -> "\\\\f",
-      "\r" -> "\\\\r")
-    val base = shorthand.foldLeft(c) { case (acc, (from, to)) =>
-      regexp_replace(acc, from, to)
-    }
-    // remaining C0 controls → \u00XX (lowercase hex, serde style);
-    // the replacement is Java-Matcher-escaped: source "\\\\" = chars \\
-    // = one emitted backslash
-    (0x00 until 0x20).filterNot(Seq(0x08, 0x09, 0x0a, 0x0c, 0x0d).contains)
-      .foldLeft(base) { (acc, code) =>
-        regexp_replace(acc, f"\\x$code%02x", f"\\\\u$code%04x")
-      }
-  }
+  /** A JSON string literal from a string column (null → JSON null) via
+    * the native `graft_json_string` expression ([[graft.functions.JsonString]]):
+    * one pass over the UTF-8 bytes with FULL serde_json escape parity —
+    * backslash, quote, the five shorthand control escapes (\b \t \n \f
+    * \r), and \u00XX for every other char below 0x20 (serde escapes them
+    * all — a stray 0x01 in a document must not produce invalid JSON). */
+  def jsonString(c: Column): Column = call_function("graft_json_string", c)
 
-  /** A JSON string literal from a string column (null → JSON null). */
-  def jsonString(c: Column): Column =
-    when(c.isNull, lit("null"))
-      .otherwise(concat(lit("\""), jsonEscape(c), lit("\"")))
+  /** `"name":` — a field name quoted once, on the driver, with the same
+    * escape rules as [[jsonString]]. */
+  def fieldKey(name: String): Column = lit(JsonString.quote(name) + ":")
 
   /** Numbers: finite → bare number; NaN/±Infinity → JSON *string*
     * (`src/sqlite/converter.rs:43-51`, same rule in all three converters).
-    * Finite rendering is serde_json/Ryū-parity via the native
-    * `graft_json_double` expression (registered by
-    * [[graft.functions.GraftExtensions]]) — Spark's plain string cast
-    * would write `1.0E7` where serde writes `10000000.0`. */
+    * Both are rendered by the native `graft_json_double` expression
+    * (registered by [[graft.functions.GraftExtensions]]) with
+    * serde_json/Ryū parity — Spark's plain string cast would write `1.0E7`
+    * where serde writes `10000000.0`. */
   def jsonDouble(c: Column): Column =
     when(c.isNull, lit("null"))
-      .when(isnan(c), lit("\"NaN\""))
-      .when(c === Double.PositiveInfinity, lit("\"Infinity\""))
-      .when(c === Double.NegativeInfinity, lit("\"-Infinity\""))
       .otherwise(call_function("graft_json_double", c.cast(DoubleType)))
 
   def jsonLong(c: Column): Column =
@@ -165,7 +146,7 @@ object TaggedJson {
       when(c.isNull, lit("null")).otherwise(
         concat(lit("{"),
           concat_ws(",", st.fields.map { f =>
-            concat(lit("\"" + f.name + "\":"),
+            concat(fieldKey(f.name),
                    encode(f.dataType, c.getField(f.name), mongoStyle))
           }: _*),
           lit("}")))
@@ -176,7 +157,7 @@ object TaggedJson {
     * the analog of `sqlite_row_to_json` (`src/sqlite/converter.rs:95-105`). */
   def rowJson(df: DataFrame, mongoStyle: Boolean = false): Column = {
     val parts = df.schema.fields.map { f =>
-      concat(lit("\"" + f.name + "\":"), encode(f.dataType, col(f.name), mongoStyle))
+      concat(fieldKey(f.name), encode(f.dataType, col(f.name), mongoStyle))
     }
     concat(
       lit("{"),

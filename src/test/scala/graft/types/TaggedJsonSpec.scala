@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -47,10 +48,11 @@ class TaggedJsonSpec extends AnyFunSuite {
       assert(JsonNumber.format(d).toDouble == d)
   }
 
-  test("jsonEscape covers every control char with serde escapes") {
+  test("jsonString covers every control char with serde escapes") {
     val in = "ab\nc\"d\\e\tf\bg\fhz"
-    val out = evalStr(TaggedJson.jsonEscape(lit(in)))
-    assert(out == "a\\u0001b\\nc\\\"d\\\\e\\tf\\bg\\fh\\u001fz")
+    val out = evalStr(TaggedJson.jsonString(lit(in)))
+    assert(out == "\"a\\u0001b\\nc\\\"d\\\\e\\tf\\bg\\fh\\u001fz\"")
+    assert(evalStr(TaggedJson.jsonString(lit(null).cast(StringType))) == "null")
   }
 
   test("jsonDouble: non-finite floats become JSON strings (converter.rs:43-51)") {
@@ -157,5 +159,114 @@ class TaggedJsonSpec extends AnyFunSuite {
     assert(r.getString(0) == "7")
     assert(r.getString(1) == """{"id":7,"v":"x"}""")
     assert(r.getString(2) == "mysql")
+  }
+
+  test("field names with quotes, backslashes and controls are escaped") {
+    val s = spark
+    val hostile = Seq("a\"b", "c\\d", "e\u0001f", "g\nh")
+    val schema = StructType(hostile.map(StructField(_, LongType)) :+
+      StructField("s", StructType(hostile.map(StructField(_, StringType)))))
+    val row = Row((hostile.indices.map(_.toLong) :+ Row(hostile: _*)): _*)
+    val df = s.createDataFrame(java.util.Collections.singletonList(row), schema)
+    val keys = Seq("\"a\\\"b\"", "\"c\\\\d\"", "\"e\\u0001f\"", "\"g\\nh\"")
+    val json = df.select(TaggedJson.rowJson(df).as("j")).head().getString(0)
+    assert(json == keys.zipWithIndex.map { case (k, i) => s"$k:$i" }.mkString("{", ",", ",") +
+      "\"s\":" + keys.zip(keys).map { case (k, v) => s"$k:$v" }.mkString("{", ",", "}") + "}")
+    val parsed = df.select(from_json(TaggedJson.rowJson(df), schema).as("p"))
+      .select("p.*").head()
+    assert(parsed == row)
+    // the Mongo document encoder shares the key rule
+    val mongo = df.select(graft.jsonb.MongoIngest.docJson(df)).head().getString(0)
+    assert(mongo == json)
+  }
+
+  /** A plain-Scala serde_json escaper: the reference the native
+    * expression is checked against. */
+  private def refJsonString(v: Option[String]): String = v match {
+    case None => "null"
+    case Some(str) =>
+      val sb = new StringBuilder("\"")
+      str.foreach {
+        case '"'  => sb ++= "\\\""
+        case '\\' => sb ++= "\\\\"
+        case '\b' => sb ++= "\\b"
+        case '\t' => sb ++= "\\t"
+        case '\n' => sb ++= "\\n"
+        case '\f' => sb ++= "\\f"
+        case '\r' => sb ++= "\\r"
+        case c if c < 0x20 => sb ++= f"\\u${c.toInt}%04x"
+        case c => sb += c
+      }
+      (sb += '"').toString
+  }
+
+  /** Code points from every escape class plus 1- to 4-byte UTF-8
+    * (4-byte ones are surrogate pairs in the JVM string). */
+  private val codePoint: Gen[Int] = Gen.frequency(
+    3 -> Gen.choose(0x00, 0x1f),
+    2 -> Gen.oneOf('"'.toInt, '\\'.toInt),
+    4 -> Gen.choose(0x20, 0x7f),
+    2 -> Gen.choose(0x80, 0x7ff),
+    2 -> Gen.oneOf(Gen.choose(0x800, 0xd7ff), Gen.choose(0xe000, 0xffff)),
+    2 -> Gen.choose(0x10000, 0x10ffff))
+
+  private val hostileString: Gen[Option[String]] = Gen.frequency(
+    1 -> Gen.const(None),
+    19 -> Gen.listOf(codePoint).map { cps =>
+      val sb = new java.lang.StringBuilder
+      cps.foreach(sb.appendCodePoint)
+      Some(sb.toString)
+    })
+
+  /** Encode generated strings through a non-foldable column (an RDD scan,
+    * so neither constant folding nor the local-relation rule evaluates
+    * the projection on the driver) and check every row against the
+    * reference escaper and a `from_json` parse back. */
+  private def checkJsonStringProperty(codegen: Boolean): Unit = {
+    val s = spark
+    val schema = StructType(Seq(StructField("raw", StringType)))
+    val parsedSchema = StructType(Seq(StructField("v", StringType)))
+    val prop = Prop.forAll(Gen.listOfN(200, hostileString)) { raws =>
+      val rdd = s.sparkContext.parallelize(raws.map(r => Row(r.orNull)), 2)
+      val enc = TaggedJson.jsonString(col("raw"))
+      val df = s.createDataFrame(rdd, schema).select(col("raw"), enc.as("json"),
+        from_json(concat(lit("{\"v\":"), enc, lit("}")), parsedSchema)
+          .getField("v").as("parsed"))
+      val wscg = df.queryExecution.executedPlan.collect {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+      }
+      assert(wscg.nonEmpty == codegen, df.queryExecution.executedPlan.toString)
+      df.collect().forall { r =>
+        val raw = Option(r.getString(0))
+        r.getString(1) == refJsonString(raw) && Option(r.getString(2)) == raw
+      }
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(5), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("jsonString property: generated strings, whole-stage codegen") {
+    withConf("spark.sql.codegen.wholeStage" -> "true",
+             "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
+      checkJsonStringProperty(codegen = true)
+    }
+  }
+
+  test("jsonString property: generated strings, interpreted (NO_CODEGEN)") {
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+             "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      checkJsonStringProperty(codegen = false)
+    }
+  }
+
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val old = kvs.map { case (k, _) => k -> conf.getOption(k) }
+    kvs.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None)    => conf.unset(k)
+    }
   }
 }
