@@ -269,27 +269,27 @@ object BucketedMergeTarget {
 
   /** Read `buckets` (with the bucket column attached) from the version
     * dirs the manifest assigns them to — a partition-pruned read: only
-    * the named bucket directories are ever listed or opened. */
+    * the named bucket directories are ever listed or opened.
+    *
+    * Every dir is read with the MANIFEST schema (all fields nullable),
+    * never one inferred from a file footer: files written before an
+    * additively-evolved column existed lack it and read it as null, and
+    * one dir may hold files of both generations (a [[copyBuckets]]
+    * mirror dir gathers buckets from several source dirs), where footer
+    * inference would pick one file's schema and drop the newer column. */
   private[graft] def readBuckets(spark: SparkSession, path: String, m: Manifest,
                           buckets: Set[Int]): DataFrame = {
+    val schema = StructType(m.schema.fields.map(_.copy(nullable = true)))
+      .add(BucketCol, "int")
     val owned = m.buckets.filter { case (b, _) => buckets.contains(b) }
-    if (owned.isEmpty) {
-      val schema = m.schema.add(BucketCol, "int")
+    if (owned.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    }
     val byDir = owned.groupBy(_._2).view.mapValues(_.keySet).toMap
-    val union = byDir.toSeq.sortBy(_._1).map { case (dirName, bs) =>
+    byDir.toSeq.sortBy(_._1).map { case (dirName, bs) =>
       val base = s"$path/$dirName"
       val dirs = bs.toSeq.sorted.map(b => s"$base/$BucketCol=$b")
-      spark.read.option("basePath", base).parquet(dirs: _*)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-    // dirs written before an additively-evolved column existed lack it in
-    // their parquet schema: the allowMissing union reconciles MIXED dirs,
-    // and any manifest column still absent (every read dir predates it)
-    // is null-filled explicitly; the final select conforms to the
-    // manifest's (newest) column order
-    addMissingColumns(union, m.schema)
-      .select((m.schema.fieldNames.toIndexedSeq :+ BucketCol).map(col): _*)
+      spark.read.schema(schema).option("basePath", base).parquet(dirs: _*)
+    }.reduce(_.unionByName(_))
   }
 
   /** Full current contents (user-facing — bucket column dropped). */
@@ -385,12 +385,7 @@ object BucketedMergeTarget {
                              pkCols: Seq[String] = Nil,
                              preBucketed: Boolean = false,
                              compactedFrom: Long = -1L): PreparedVersion = {
-    val (f, p) = fileSystem(spark, path)
-    val newVer = existing.map(_.version).getOrElse(0L) + 1
-    val dirName = versionDirName(newVer)
-    val verDir = new Path(p, dirName)
-    val staging = new Path(p,
-      s"_staging_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val staging = stagingDir(spark, path)
     // co-locate each bucket's rows before the partitioned write: without
     // this, partitionBy emits one file per (writer task × bucket) — up to
     // shufflePartitions × nBuckets tiny files per commit (measured: the
@@ -402,6 +397,53 @@ object BucketedMergeTarget {
     // would only re-derive that layout, so it is skipped.
     (if (preBucketed) data else data.repartition(col(BucketCol)))
       .write.mode("overwrite").partitionBy(BucketCol).parquet(staging.toString)
+    val userSchema = StructType(data.schema.filterNot(_.name == BucketCol))
+    finishVersion(spark, path, existing, staging, dropFromOld, nBuckets,
+      Base64.getEncoder.encodeToString(userSchema.json.getBytes("UTF-8")),
+      Map.empty, bucketCols, pkCols, compactedFrom)
+  }
+
+  /** A writer-unique `_staging_*` dir under the target root. */
+  private def stagingDir(spark: SparkSession, path: String): Path =
+    new Path(fileSystem(spark, path)._2,
+      s"_staging_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+
+  /** Run `task` over `items` on a bounded pool: each item is an
+    * independent filesystem round trip (a footer read, a bucket copy),
+    * so serializing them is pure latency (32 sequential footer reads
+    * were a measured ~0.3 s of every commit). Returns once every task
+    * has finished; the first failure is rethrown. */
+  private def inParallel[A, B](items: Seq[A])(task: A => B): Seq[B] = {
+    if (items.isEmpty) return Seq.empty
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(items.size, 16))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try Await.result(Future.traverse(items)(a => Future(task(a))), 600.seconds)
+    finally {
+      // a failed task must not leave siblings writing into a dir the
+      // caller is about to delete
+      pool.shutdown()
+      pool.awaitTermination(600, java.util.concurrent.TimeUnit.SECONDS)
+      ()
+    }
+  }
+
+  /** The commit tail every write shares: move the fully written
+    * `staging` dir into place as a new version dir, find the buckets it
+    * holds, and build (not publish) the manifest that points them at it.
+    * `knownCounts` are row counts the caller already has (a copy carries
+    * its source's); a present bucket without one is counted from its
+    * parquet footers. */
+  private def finishVersion(spark: SparkSession, path: String,
+                            existing: Option[Manifest], staging: Path,
+                            dropFromOld: Set[Int], nBuckets: Int, schemaB64: String,
+                            knownCounts: Map[Int, Long], bucketCols: Seq[String],
+                            pkCols: Seq[String], compactedFrom: Long): PreparedVersion = {
+    val (f, p) = fileSystem(spark, path)
+    val newVer = existing.map(_.version).getOrElse(0L) + 1
+    val dirName = versionDirName(newVer)
+    val verDir = new Path(p, dirName)
     // empty batches write no partition dirs — an empty staging dir renames
     // fine and yields present = ∅ below, same as before. The destination
     // name is writer-unique, so this rename is uncontended by design; a
@@ -418,8 +460,6 @@ object BucketedMergeTarget {
         .collect { case n if n.startsWith(BucketCol + "=") =>
           n.drop(BucketCol.length + 1).toInt }.toSet
 
-    val userSchema = StructType(data.schema.filterNot(_.name == BucketCol))
-    val schemaB64 = Base64.getEncoder.encodeToString(userSchema.json.getBytes("UTF-8"))
     val oldBuckets = existing.map(_.buckets).getOrElse(Map.empty[Int, String])
     val newBuckets = (oldBuckets -- dropFromOld) ++ present.map(_ -> dirName).toMap
 
@@ -429,30 +469,18 @@ object BucketedMergeTarget {
     // This was previously a count scan — one extra job per commit, and
     // commit fixed overhead is exactly what bounds incremental-store
     // throughput. Untouched buckets carry their previous counts forward.
-    // Footers are read CONCURRENTLY (a dedicated pool — each open is an
-    // independent ~20 ms metadata fetch, and serializing 32 of them was
-    // a measured ~0.3 s of every commit's latency).
-    val newCounts: Map[Int, Long] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(math.max(present.size, 1), 16))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val conf = spark.sessionState.newHadoopConf()
-      try Await.result(Future.traverse(present.toSeq) { b => Future {
-        val bucketDir = new Path(verDir, s"$BucketCol=$b")
-        val rows = f.listStatus(bucketDir).toSeq
-          .filter(st => st.getPath.getName.endsWith(".parquet"))
-          .map { st =>
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(st, conf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getRecordCount finally r.close()
-          }.sum
-        b -> rows
-      } }, 600.seconds).toMap
-      finally pool.shutdown()
-    }
+    val conf = spark.sessionState.newHadoopConf()
+    val newCounts: Map[Int, Long] =
+      knownCounts.view.filterKeys(present.contains).toMap ++
+        inParallel((present -- knownCounts.keySet).toSeq) { b =>
+          b -> f.listStatus(new Path(verDir, s"$BucketCol=$b")).toSeq
+            .filter(st => st.getPath.getName.endsWith(".parquet"))
+            .map { st =>
+              val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+              val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+              try r.getRecordCount finally r.close()
+            }.sum
+        }
     val oldCounts = existing.map(_.rowCounts).getOrElse(Map.empty[Int, Long])
     val rowCounts = ((oldCounts -- dropFromOld).view.filterKeys(newBuckets.contains).toMap
       ++ newCounts)
@@ -619,7 +647,9 @@ object BucketedMergeTarget {
     // single-column probe is only sound when the PK IS that column.
     require(m.bucketCols.nonEmpty || m.pkCols.isEmpty || m.pkCols == Seq(probeCol),
       s"target is bucketed by its PK ${m.pkCols} — probe with exactly those columns")
-    val distinctKeys = keys.distinct
+    // a null key matches nothing (SQL equality), so it is dropped up
+    // front: both probe forms below then see the same null-free key set
+    val distinctKeys = keys.distinct.filter(_ != null)
     val touched = distinctKeys.map(k => localBucket(k, keyType, m.nBuckets)).toSet
       .intersect(m.buckets.keySet)
     if (touched.isEmpty)
@@ -633,12 +663,12 @@ object BucketedMergeTarget {
       // rung (q_incremental_cluster batch 2, ~1M touched ids against 8
       // bucket files): 95 s byId + 56 s byRep, nearly all driver-side
       // plan work. A broadcast LEFT SEMI join against a local relation
-      // of the keys is the same predicate (exact equality, null-free
-      // keys) with a constant-size plan: the same probe pair measured
-      // 3.7 + 11.9 s after the switch (IncProfile, same fixture/epoch).
-      // Threshold is deliberately far
-      // above any point-lookup use (store probes are ≤ a few thousand
-      // keys) and far below the edge-batch regime.
+      // of the keys is the same predicate (exact equality; the keys are
+      // null-free, see above) with a constant-size plan: the same probe
+      // pair measured 3.7 + 11.9 s after the switch (IncProfile, same
+      // fixture/epoch). Threshold is deliberately far above any
+      // point-lookup use (store probes are ≤ a few thousand keys) and far
+      // below the edge-batch regime.
       if (distinctKeys.size <= 10000)
         pruned.filter(col(probeCol).isInCollection(distinctKeys))
       else {
@@ -920,32 +950,103 @@ object BucketedMergeTarget {
     } finally { keyed.unpersist(); () }
   }
 
-  /** Bucket-REPLACE commit — the replication write shape: the named
-    * `buckets` come to contain EXACTLY the rows of `data` that hash into
-    * them. Prior contents of those buckets are dropped, a named bucket
-    * with no incoming rows becomes empty, and buckets outside the set are
-    * never read or rewritten (I/O ∝ the replaced buckets, as always).
-    * This is what gives [[graft.streaming.StoreFollower]] DELETE fidelity
-    * without row diffing: a mirror applies a source store's changed
-    * buckets wholesale, so a key deleted at the source simply isn't in
-    * the replacement and disappears from the replica. Requires bucket
-    * identity with the caller's layout — same nBuckets (enforced loudly;
-    * a silent fallback to the target's count would scatter rows across a
-    * different keyspace partitioning) and same bucketCols. */
+  /** Bucket-REPLACE commit — the replication write shape for an
+    * arbitrary frame: the named `buckets` come to contain EXACTLY the
+    * rows of `data` that hash into them. Prior contents of those buckets
+    * are dropped, a named bucket with no incoming rows becomes empty, and
+    * buckets outside the set are never read or rewritten (I/O ∝ the
+    * replaced buckets, as always). A key absent from the replacement
+    * disappears, so applying a source's changed buckets wholesale carries
+    * DELETE fidelity without row diffing. When the rows ARE another
+    * store's buckets, [[copyBuckets]] makes the same commit without a
+    * Spark job; this form rehashes and rewrites every row. Requires
+    * bucket identity with the caller's layout — same nBuckets (enforced
+    * loudly; a silent fallback to the target's count would scatter rows
+    * across a different keyspace partitioning) and same bucketCols. */
   def replaceBuckets(data: DataFrame, path: String, buckets: Set[Int],
                      pkCols: Seq[String], nBuckets: Int = DefaultBuckets,
                      bucketCols: Seq[String] = Nil): MergeStats = {
     val spark = data.sparkSession
     val existing = currentManifest(spark, path)
-    existing.foreach(m => require(m.nBuckets == nBuckets,
-      s"target has ${m.nBuckets} buckets but the replacement was computed against " +
-        s"$nBuckets — bucket replacement requires bucket identity"))
-    val bc = resolveBucketCols(existing, pkCols, bucketCols)
+    val bc = checkBucketIdentity(existing, nBuckets, pkCols, bucketCols)
     if (buckets.isEmpty)
       return MergeStats(existing.map(_.version).getOrElse(0L), 0, nBuckets, 0L)
     val bucketed = withBucket(data, bc, nBuckets)
       .filter(col(BucketCol).isin(buckets.toSeq: _*))
     commitVersion(spark, path, existing, bucketed, buckets, nBuckets, bc, pkCols)
+  }
+
+  /** The bucket-replace checks: same nBuckets, then [[resolveBucketCols]]. */
+  private def checkBucketIdentity(existing: Option[Manifest], nBuckets: Int,
+                                  pkCols: Seq[String], bucketCols: Seq[String]): Seq[String] = {
+    existing.foreach(m => require(m.nBuckets == nBuckets,
+      s"target has ${m.nBuckets} buckets but the replacement was computed against " +
+        s"$nBuckets — bucket replacement requires bucket identity"))
+    resolveBucketCols(existing, pkCols, bucketCols)
+  }
+
+  /** Bucket-COPY commit — [[replaceBuckets]] for rows that already sit in
+    * another store laid out identically (the [[graft.streaming
+    * .StoreFollower]] mirror): the named `buckets` of the store at
+    * `source`, as its manifest `src` assigns them, are copied file by
+    * file, as bytes, into ONE new version dir of `path`, and committed
+    * through the standard manifest protocol (same publish, lock and gc).
+    * No Spark job runs: nothing is read, rehashed or re-encoded, since a
+    * source bucket IS the mirror bucket. A named bucket the source no
+    * longer owns drops out of the mirror, as in [[replaceBuckets]].
+    *
+    * The mirror's manifest takes the source's schema and, per copied
+    * bucket, the source's row count (footers are read only for a bucket
+    * a legacy source manifest has no count for). Copies run through the
+    * Hadoop FileSystem API on a bounded pool, into a writer-unique
+    * staging dir. Any failure — an unreadable source file, a committed
+    * bucket dir holding no data file, or a source that moved a bucket on
+    * and reclaimed its dir while the copy ran — deletes the staging dir
+    * and throws; nothing is published, so a rerun replays cleanly. */
+  private[graft] def copyBuckets(spark: SparkSession, source: String, src: Manifest,
+                                 path: String, buckets: Set[Int]): MergeStats = {
+    require(src.pkCols.nonEmpty,
+      s"source store at $source records no PK (legacy manifest) — " +
+        "a mirror needs the key to lay out its buckets identically")
+    val existing = currentManifest(spark, path)
+    val bc = checkBucketIdentity(existing, src.nBuckets, src.pkCols, src.bucketCols)
+    if (buckets.isEmpty)
+      return MergeStats(existing.map(_.version).getOrElse(0L), 0, src.nBuckets, 0L)
+    val (f, _) = fileSystem(spark, path)
+    val (sf, sp) = fileSystem(spark, source)
+    val conf = spark.sessionState.newHadoopConf()
+    val owned = src.buckets.filter { case (b, _) => buckets.contains(b) }
+    val staging = stagingDir(spark, path)
+    try {
+      f.mkdirs(staging)
+      inParallel(owned.toSeq) { case (b, dir) =>
+        val from = new Path(new Path(sp, dir), s"$BucketCol=$b")
+        val files = sf.listStatus(from).toSeq
+        // a committed bucket always holds at least one data file
+        if (!files.exists(_.getPath.getName.endsWith(".parquet")))
+          throw new java.io.IOException(s"source bucket $from holds no data file")
+        val to = new Path(staging, s"$BucketCol=$b")
+        files.foreach { st =>
+          org.apache.hadoop.fs.FileUtil.copy(sf, st.getPath, f,
+            new Path(to, st.getPath.getName), false, conf)
+        }
+      }
+      // the source's gc reclaims a bucket dir only once BOTH its retained
+      // manifests have moved the bucket off it — two versions past `src`.
+      // Dirs are write-once, so a bucket the current source manifest
+      // still maps to the dir we copied was never reclaimed
+      val now = currentManifest(spark, source)
+      if (now.exists(c => c.version > src.version + 1 &&
+          owned.exists { case (b, d) => !c.buckets.get(b).contains(d) }))
+        throw new java.io.IOException(s"source at $source moved past v${src.version} " +
+          "while its buckets were copied — replay")
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        f.delete(staging, true)
+        throw e
+    }
+    publishVersion(spark, finishVersion(spark, path, existing, staging, buckets,
+      src.nBuckets, src.schemaB64, src.rowCounts, bc, src.pkCols, compactedFrom = -1L))
   }
 
   /** MAJOR COMPACTION: rewrite every live bucket into ONE new version

@@ -44,6 +44,15 @@ object IncrementalSync {
     if (row.isNullAt(0)) previous else row.getAs[Number](0).longValue()
   }
 
+  /** [[watermarkOf]] of the whole `source` together with the count of
+    * its rows past `watermark`, from ONE aggregate over one scan: a sync
+    * poll needs both, and an idle poll is then that aggregate alone. */
+  def scanWatermark(source: DataFrame, versionCol: String, watermark: Long): (Long, Long) = {
+    val row = source.agg(max(col(versionCol)).cast("long"),
+      count_if(col(versionCol) > watermark)).head()
+    (if (row.isNullAt(0)) watermark else row.getLong(0), row.getLong(1))
+  }
+
   /** `estimate_changes` (`src/xmin/reader.rs:317-336`). */
   def estimateChanges(df: DataFrame, versionCol: String, watermark: Long): Long =
     df.filter(col(versionCol) > watermark).count()

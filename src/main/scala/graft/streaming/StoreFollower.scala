@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sinks.BucketedMergeTarget
@@ -26,11 +28,13 @@ import graft.sinks.BucketedMergeTarget.Manifest
   * appeared/vanished). The delta is the changed buckets' CURRENT
   * contents: keys sharing a bucket with a changed key are re-emitted, so
   * the feed is at-least-once PER KEY and upsert-shaped. Both supported
-  * consumptions absorb that idempotently — latest-wins merge by cursor,
-  * or wholesale bucket replacement ([[replicate]]), which also carries
-  * DELETE fidelity: a key deleted at the source isn't in its bucket's
-  * replacement contents, so it disappears from the mirror with no
-  * row-level diffing.
+  * consumptions absorb that idempotently — latest-wins merge by cursor
+  * over [[poll]]'s rows, or wholesale bucket replacement ([[replicate]]),
+  * which also carries DELETE fidelity: a key deleted at the source isn't
+  * in its bucket's replacement contents, so it disappears from the mirror
+  * with no row-level diffing. [[replicate]] never reads rows at all: the
+  * mirror's buckets are the source's, so it copies each changed bucket's
+  * files as bytes ([[graft.sinks.BucketedMergeTarget.copyBuckets]]).
   */
 object StoreFollower {
 
@@ -54,53 +58,55 @@ object StoreFollower {
     * newer than `state` (nothing to do — the cheap steady-state answer:
     * one manifest read, no data I/O, no Spark job). */
   def poll(spark: SparkSession, path: String, state: FollowState): Option[Delta] =
-    BucketedMergeTarget.currentManifest(spark, path) match {
-      case None => None
-      case Some(cur) if state.seen.exists(_.version >= cur.version) => None
-      case Some(cur) =>
+    pending(spark, path, state).map { case (cur, changed) =>
+      val rows = BucketedMergeTarget.readBuckets(spark, path, cur, changed)
+        .drop(BucketedMergeTarget.BucketCol)
+      Delta(rows, changed, cur.version, FollowState(Some(cur)))
+    }
+
+  /** Mirror every pending source change into `target`, bucket-for-bucket:
+    * each pending source version is applied as ONE [[BucketedMergeTarget
+    * .copyBuckets]] commit, which copies the changed buckets' files as
+    * bytes from the source's version dirs into one new mirror version
+    * dir — no Spark job, nothing read, rehashed or rewritten. Upserts,
+    * deletes and emptied buckets all replicate exactly, and a replay of
+    * an already-applied version copies the same files again (idempotent).
+    * The mirror shares the source's bucket layout by construction, and
+    * owns its copies: source gc never touches them. Loops until the
+    * source has nothing newer; returns the advanced watermark.
+    *
+    * Contention on the TARGET (another writer committing between our
+    * read and publish), or a source whose gc reclaimed a bucket dir
+    * mid-copy, surfaces as an IOException — rerun; the watermark only
+    * advances past a version once it lands. */
+  @tailrec
+  def replicate(spark: SparkSession, source: String, target: String,
+                state: FollowState = Start): FollowState =
+    pending(spark, source, state) match {
+      case None => state
+      case Some((cur, changed)) =>
+        BucketedMergeTarget.copyBuckets(spark, source, cur, target, changed)
+        replicate(spark, source, target, FollowState(Some(cur)))
+    }
+
+  /** The source's current manifest when it is newer than `state`, with
+    * the buckets changed since: owner dir differs, plus buckets EMPTIED
+    * since last seen (present before, absent now) — those carry no rows
+    * but a mirror must still clear them. EXCEPTION: a compaction commit
+    * over exactly our watermark is content-identical by construction
+    * (only owner dirs moved) — advance past it with zero I/O instead of
+    * re-reading the store. */
+  private def pending(spark: SparkSession, path: String,
+                      state: FollowState): Option[(Manifest, Set[Int])] =
+    BucketedMergeTarget.currentManifest(spark, path)
+      .filterNot(cur => state.seen.exists(_.version >= cur.version))
+      .map { cur =>
         val prev = state.seen.map(_.buckets).getOrElse(Map.empty[Int, String])
-        // changed = owner dir differs, plus buckets EMPTIED since last
-        // seen (present before, absent now) — those carry no rows but a
-        // mirror must still clear them. EXCEPTION: a compaction commit
-        // over exactly our watermark is content-identical by
-        // construction (only owner dirs moved) — advance past it with
-        // zero I/O instead of re-reading the store
         val changed =
           if (state.seen.exists(_.version == cur.compactedFrom)) Set.empty[Int]
           else cur.buckets.collect {
             case (b, d) if !prev.get(b).contains(d) => b
           }.toSet ++ (prev.keySet -- cur.buckets.keySet)
-        val rows = BucketedMergeTarget.readBuckets(spark, path, cur, changed)
-          .drop(BucketedMergeTarget.BucketCol)
-        Some(Delta(rows, changed, cur.version, FollowState(Some(cur))))
-    }
-
-  /** Mirror every pending source change into `target`, bucket-for-bucket:
-    * each drained delta is applied as ONE [[BucketedMergeTarget
-    * .replaceBuckets]] commit, so upserts, deletes and emptied buckets
-    * all replicate exactly, and a replay of an already-applied delta
-    * rewrites the same buckets to the same contents (idempotent). The
-    * mirror shares the source's bucket layout by construction. Loops
-    * until the source has nothing newer; returns the advanced watermark.
-    *
-    * Contention on the TARGET (another writer committing between our
-    * read and publish) surfaces as the store's replay IOException —
-    * rerun; the watermark only advances past a delta once it lands. */
-  def replicate(spark: SparkSession, source: String, target: String,
-                state: FollowState = Start): FollowState = {
-    var st = state
-    var draining = true
-    while (draining) poll(spark, source, st) match {
-      case None => draining = false
-      case Some(d) =>
-        val m = d.state.seen.get // poll's own current manifest — always set here
-        require(m.pkCols.nonEmpty,
-          s"source store at $source records no PK (legacy manifest) — " +
-            "a mirror needs the key to lay out its buckets identically")
-        BucketedMergeTarget.replaceBuckets(d.rows, target, d.changedBuckets,
-          m.pkCols, m.nBuckets, m.bucketCols)
-        st = d.state
-    }
-    st
-  }
+        cur -> changed
+      }
 }

@@ -54,8 +54,8 @@ object SyncCycle {
     // counter makes the incremental predicate match nothing, so the
     // change batch itself can never reveal it. One aggregation; it doubles
     // as the new watermark (max(changes.version) == max(source.version)
-    // whenever any change exists).
-    val sourceMax = IncrementalSync.watermarkOf(source, versionCol, watermark)
+    // whenever any change exists) and counts the change batch.
+    val (sourceMax, n) = IncrementalSync.scanWatermark(source, versionCol, watermark)
 
     if (IncrementalSync.detectWraparound(watermark, sourceMax)) {
       // full resync (read_all_rows branch): target replaced wholesale
@@ -65,7 +65,7 @@ object SyncCycle {
       val newWatermark = math.max(watermark, sourceMax)
       val upserted = applyUpserts(target, changes, pkCols)
       val merged = if (reconcile) deleteOrphans(upserted, source, pkCols) else upserted
-      (merged, Report(changes.count(), newWatermark, fullResync = false))
+      (merged, Report(n, newWatermark, fullResync = false))
     }
   }
 
@@ -92,7 +92,9 @@ object SyncCycle {
     (1 to cycles).map { i =>
       val source = sourceProvider()
       val wm = store.watermark(schema, table)
-      val sourceMax = IncrementalSync.watermarkOf(source, versionCol, wm)
+      // one scan per poll: the source max (wraparound check + new
+      // watermark) and the change count come from the same aggregate
+      val (sourceMax, n) = IncrementalSync.scanWatermark(source, versionCol, wm)
       val report =
         if (IncrementalSync.detectWraparound(wm, sourceMax)) {
           // full resync (read_all_rows branch): target replaced wholesale
@@ -107,10 +109,9 @@ object SyncCycle {
           BucketedMergeTarget.replaceAll(source, targetPath, pkCols, versionCol, nBuckets)
           Report(source.count(), math.max(wm, sourceMax), fullResync = true)
         } else {
-          val changes = IncrementalSync.readChanges(source, versionCol, wm)
-          val n = changes.count()
           if (n > 0)
-            BucketedMergeTarget.merge(changes, targetPath, pkCols, versionCol, nBuckets)
+            BucketedMergeTarget.merge(IncrementalSync.readChanges(source, versionCol, wm),
+              targetPath, pkCols, versionCol, nBuckets)
           if (i % reconcileEvery == 0) {
             // delete reconciliation (T5): orphan keys → bucket-pruned delete
             val orphans = BucketedMergeTarget.read(spark, targetPath)

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite (JVM startup is the
@@ -16,5 +20,22 @@ object SparkTestSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The Spark jobs `body` submits, from any thread (suites run one at a
+    * time, so no other spec's jobs land in the count). */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    GraftTestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      GraftTestBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 }

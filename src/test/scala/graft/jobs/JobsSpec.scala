@@ -211,6 +211,30 @@ class JobsSpec extends AnyFunSuite {
       graft.sinks.BucketedMergeTarget.read(s, tgtDir)))
   }
 
+  test("an idle runLoop poll scans the source once: one aggregate") {
+    val s = spark
+    import s.implicits._
+    val srcDir = tmpDir("sync-idle-src").resolve("src.parquet").toString
+    (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v").write.parquet(srcDir)
+    // explicit schema: footer inference would submit a job of its own
+    val source = s.read.schema("id long, v string").parquet(srcDir)
+    val tgtDir = tmpDir("sync-idle").toString + "/t.parquet"
+    val store = new SyncStateStore(tmpDir("sync-idle-state").resolve("state.jsonl"))
+    def poll() = SyncCycle.runLoop(() => source, tgtDir, "public", "t", "id",
+      Seq("id"), store, cycles = 1, reconcileEvery = Int.MaxValue, nBuckets = 4).head
+    assert(poll().fullResync) // seeds the target
+    val (idle, jobs) = SparkTestSession.jobsDuring(poll())
+    assert(idle == SyncCycle.Report(0L, 20L, fullResync = false))
+    // the source max and the change count come from ONE aggregate (the
+    // row count is manifest metadata). Adaptive execution runs a global
+    // aggregate as two jobs, its exchange's map stage and the result, so
+    // the reference is one aggregate measured the same way
+    val (_, oneAggregate) = SparkTestSession.jobsDuring(source.agg(max(col("id"))).head())
+    assert(oneAggregate >= 1)
+    assert(jobs == oneAggregate,
+      s"an idle poll submitted $jobs jobs, one aggregate submits $oneAggregate")
+  }
+
   test("runLoop reseeds a MISSING target from the full source, never from changes only") {
     val s = spark
     import s.implicits._

@@ -391,6 +391,24 @@ class MergeTargetSpec extends AnyFunSuite {
     assert(hit.collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
+  test("readMatchingLocal: a null key matches nothing on both probe paths") {
+    val dir = tmp("mt-local-null").resolve("t").toString
+    BucketedMergeTarget.merge(kv((0L until 300L).map(i => (i, 1L, s"v$i"))),
+      dir, Seq("id"), "cursor", 8)
+    def probe(keys: Seq[Any]): Set[Long] =
+      BucketedMergeTarget.readMatchingLocal(spark, dir, "id", keys,
+        org.apache.spark.sql.types.LongType).collect().map(_.getLong(0)).toSet
+    // the IN path (≤ 10k keys) and the broadcast semi-join path (> 10k)
+    // must agree: the null probes nothing, the other keys match exactly
+    val small: Seq[Any] = Seq(null, 3L, 250L, 999999L)
+    val large: Seq[Any] = null +: (100L until 10200L)
+    assert(probe(small) == Set(3L, 250L))
+    assert(probe(large) == (100L until 300L).toSet)
+    assert(probe(large) == BucketedMergeTarget.read(spark, dir)
+      .filter(col("id").isInCollection(large)).collect().map(_.getLong(0)).toSet)
+    assert(probe(Seq(null)).isEmpty)
+  }
+
   test("composite PKs bucket and merge correctly") {
     val s = spark
     import s.implicits._
